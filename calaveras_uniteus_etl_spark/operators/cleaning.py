@@ -45,7 +45,10 @@ def _string_cols(df: DataFrame) -> list[str]:
 
 
 def drop_all_null_rows(df: DataFrame) -> DataFrame:
-    return df.na.drop(how="all")
+    # _line_no (read_delimited(with_line_number=True)) is never null and
+    # is not data: it must not keep an otherwise all-null row alive
+    data_cols = [c for c in df.columns if c != "_line_no"]
+    return df.na.drop(how="all", subset=data_cols)
 
 
 # --- B2: per-column null profiling (single aggregate pass) -----------------

@@ -11,10 +11,9 @@ candidate set — the standard SRP-LSH construction (Charikar 2002).
 Determinism contract: hyperplane entries are ±1 Rademacher signs
 derived from md5 of "plane:dim", so the same buckets fall out of both
 engines bit-for-bit. Every dot product is a LEFT-FOLD sum of
-float→double-exact ±terms, in three interchangeable spellings: the
-oracle's left-associated ``+``/``-`` SQL chain, the equivalent Spark
-expression chain (``_dot_signs_spark``), and the vectorized
-``np.cumsum`` hot path (``buckets_array_udf``) — all associate
+float→double-exact ±terms, in two interchangeable spellings: the
+oracle's left-associated ``+``/``-`` SQL chain and the vectorized
+``np.cumsum`` hot path (``buckets_array_udf``) — both associate
 identically, so even near-zero dots sign-match.
 
 Scale notes: bucketing is a narrow projection (no shuffle); the
@@ -63,45 +62,6 @@ def plane_signs(plane: int) -> list[float]:
 
 
 # --- Spark side ------------------------------------------------------------
-
-
-def _dot_signs_spark(vec_col: str, signs: list[float]) -> str:
-    """±1-weighted dot as an explicit left-associated sum chain.
-
-    Same fold order (and therefore bit-identical doubles) as an
-    ``aggregate(zip_with(...))`` left fold, but a flat arithmetic
-    expression stays inside whole-stage codegen instead of the
-    interpreted higher-order-function path — and multiplying by ±1 is
-    an exact sign flip, so ``- x`` ≡ ``x * -1.0``.
-    """
-    terms = [
-        ("+ " if s > 0 else "- ") + f"cast({vec_col}[{i}] as double)"
-        for i, s in enumerate(signs)
-    ]
-    # "a + b - c" parses left-associated: ((a + b) - c) — the fold order
-    return "(" + terms[0].lstrip("+ ") + " " + " ".join(terms[1:]) + ")"
-
-
-def bucket_expr(table_idx: int, vec_col: str = "embedding") -> Column:
-    """P-bit bucket id of `vec_col` under hash table `table_idx`."""
-    bits = " + ".join(
-        f"(case when {_dot_signs_spark(vec_col, plane_signs(table_idx * N_PLANES + p))} > 0 "
-        f"then {1 << p} else 0 end)"
-        for p in range(N_PLANES)
-    )
-    return F.expr(bits)
-
-
-def buckets_array_expr(vec_col: str = "embedding") -> Column:
-    """Array of all T bucket ids as a built-in expression tree.
-
-    Correct but pathological for the optimizer: T×P chains of
-    EMBED_DIM terms is a ~3000-node tree that costs seconds of
-    analysis/codegen per plan. ``buckets_array_udf`` below is the hot
-    path; this stays as the expression-level reference the oracle SQL
-    is derived from.
-    """
-    return F.array(*[bucket_expr(t, vec_col) for t in range(N_TABLES)])
 
 
 _SIGNS_MATRIX = None

@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 
 from calaveras_uniteus_etl_spark.functions.datetime_ext import epoch_us
 from calaveras_uniteus_etl_spark.functions.hashing import salted_sha256
+from calaveras_uniteus_etl_spark.operators.upsert import latest_per_group
 from calaveras_uniteus_etl_spark.plans.catalog import register
 from calaveras_uniteus_etl_spark.plans.tables import table
 
@@ -105,15 +106,10 @@ FROM (
 )
 def c4_latest_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("latest_event_id"),
-            F.col("event_type").alias("latest_event_type"),
-        )
+    return latest_per_group(e, ["user_id"], "ts", ["event_id"]).select(
+        "user_id",
+        F.col("event_id").alias("latest_event_id"),
+        F.col("event_type").alias("latest_event_type"),
     )
 
 

@@ -64,8 +64,8 @@ SELECT doc_id,
 FROM documents
 """,
     doc="Multimodal feature extraction: binary payload column → Arrow-"
-    "batched mapInPandas decode (deterministic fake; real codecs stub "
-    "behind import-try) with fixed output schema.",
+    "batched mapInPandas featurization (one deterministic md5-derived "
+    "function of the payload bytes) with fixed output schema.",
 )
 def _features_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-indexed media featurization: the Arrow mapInPandas
@@ -85,10 +85,6 @@ def _features_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_features",
         lambda: materialize(extract_features(_media(spark, sf_dir))),
     )
-
-
-def x11_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _features_index(spark, sf_dir)
 
 
 @register(

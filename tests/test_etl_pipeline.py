@@ -255,3 +255,22 @@ def test_quality_log_opt_out(tmp_path, spark, input_dir):
     ingest(spark, cfg)
     wh = Warehouse(spark, cfg.warehouse_dir)
     assert not wh.exists("data_quality_issues")
+
+
+def test_all_null_row_logged_on_ingest(tmp_path, spark, input_dir):
+    """A data line whose every field is empty is dropped by the cleaning
+    step and logged as one all_null_row issue — the never-null _line_no
+    the ingest read adds must not keep it alive."""
+    (input_dir / "people_20240101.txt").write_text(PEOPLE_V1 + "|||||\n")
+    cfg = _cfg(tmp_path)
+    report = ingest(spark, cfg)
+    assert [t.status for t in report.tasks] == [TaskStatus.COMPLETED]
+
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    assert sorted(r.person_id for r in wh.read("people").collect()) == [
+        "p1", "p2", "p3"
+    ]
+    all_null = wh.read("data_quality_issues").filter(
+        F.col("issue_type") == "all_null_row"
+    ).collect()
+    assert [(r.table_name, r.issue_count) for r in all_null] == [("people", 1)]

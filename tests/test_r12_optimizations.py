@@ -50,29 +50,37 @@ def test_vectorized_fake_frame_matches_per_row_decode():
     )
 
 
-def test_extract_batches_mixed_batch_falls_back_per_row():
-    """A batch containing one RECOGNIZED payload must route through the
-    per-row codec path for every row — never fake a real payload."""
+def test_extract_batches_featurizes_media_magic_like_any_payload():
+    """Payloads that start with real media magic (PNG, GIF, RIFF/WAVE,
+    JPEG SOI, ID3) featurize exactly like any other bytes — the one
+    deterministic function the DuckDB oracles encode, never a decode."""
     from calaveras_uniteus_etl_spark.operators.multimodal import (
         _extract_batches,
+        _fake_features,
     )
 
-    # minimal valid-magic PNG header (truncated body -> NULL dims) next
-    # to a synthetic payload
-    png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 16
+    payloads = [
+        b"\x89PNG\r\n\x1a\n" + b"\x00" * 16,
+        b"GIF89a" + b"\x01\x00\x01\x00\x00\x00\x00",
+        b"RIFF\x24\x00\x00\x00WAVEfmt " + b"\x00" * 16,
+        b"\xff\xd8\xff\xe0\x00\x10JFIF\x00",
+        b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\xff\xfb\x90\x00",
+        b"plain text",
+    ]
+    mts = ["image", "image", "audio", "image", "audio", "video"]
     pdf = pd.DataFrame(
         {
-            "doc_id": np.array([1, 2], dtype=np.int64),
-            "payload": [png, b"plain text"],
-            "media_type": ["image", "image"],
+            "doc_id": np.arange(len(payloads), dtype=np.int64),
+            "payload": payloads,
+            "media_type": mts,
         }
     )
     (out,) = list(_extract_batches(iter([pdf])))
-    byid = out.set_index("doc_id")
-    # recognized-but-truncated payload: identity features, NULL dims
-    assert pd.isna(byid.loc[1, "width"])
-    # unrecognized payload: fake decode fills dims
-    assert not pd.isna(byid.loc[2, "width"])
+    assert list(out["doc_id"]) == list(range(len(payloads)))
+    for (_, row), p, mt in zip(out.iterrows(), payloads, mts):
+        assert row["media_type"] == mt
+        for k, v in _fake_features(p, mt).items():
+            assert (None if pd.isna(row[k]) else row[k]) == v, (mt, k)
 
 
 def test_x39_expression_resize_matches_kernel(spark):
